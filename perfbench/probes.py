@@ -1,7 +1,8 @@
 """Direct layer probes for the traced run.
 
-After the workload, every traced run fills and drains a replay backlog
-(streams.replay_probe), then calls single layers directly over it:
+After the workload, every traced run fills a replay backlog and drains
+it twice, traced and untraced (streams.replay_probe), then calls single
+layers directly over it:
 
 * the ``orion_http`` stream reader: ``latestOffset``, ``partitions`` and
   ``read`` over the filled spool;
@@ -99,7 +100,6 @@ def plan_probe(run: h.Run, spark) -> None:
 
 
 def run_probes(run: h.Run, spark, stack) -> None:
-    measured_s, tracer_s = time.time() - run.t0, run.tracer.cost_s
     own_stack = stack is None
     if own_stack:
         stack = streams._Stack(run, spark)
@@ -116,5 +116,3 @@ def run_probes(run: h.Run, spark, stack) -> None:
     finally:
         if own_stack:
             stack.close()
-    # the workload's wall time against the same time less the tracer's own
-    run.layers["trace.overhead_ratio"] = measured_s / (measured_s - tracer_s)

@@ -23,14 +23,12 @@ class Tracer:
         self.enabled = enabled
         self.trace_id = trace_id
         self.spans: list[dict] = []
-        self.cost_s = 0.0  # time spent inside the tracer itself
         self._ids = itertools.count(1)
         self._lock = threading.Lock()  # the listener adds from its own thread
 
     def add(self, name: str, start: float, end: float, parent: int | None = None, **attrs) -> int | None:
         if not self.enabled:
             return None
-        t0 = time.perf_counter()
         with self._lock:
             span_id = next(self._ids)
             self.spans.append(
@@ -44,13 +42,7 @@ class Tracer:
                     **attrs,
                 }
             )
-            self.cost_s += time.perf_counter() - t0
         return span_id
-
-    def charge(self, seconds: float) -> None:
-        """Count tracer work done outside ``add`` in ``cost_s``."""
-        with self._lock:
-            self.cost_s += seconds
 
     @contextlib.contextmanager
     def span(self, name: str, parent: int | None = None, **attrs):
@@ -81,10 +73,8 @@ class BatchSpans(StreamingQueryListener):
         pass
 
     def onQueryProgress(self, event):  # noqa: N802
-        t0 = time.perf_counter()
         p = json.loads(event.progress.json)
         start = _epoch(p["timestamp"])
-        self.tracer.charge(time.perf_counter() - t0)
         self.tracer.add(
             "stream.batch",
             start,

@@ -186,11 +186,16 @@ class _Stack:
         self.delivered_before = self.collector.count()
         return time.time() - t0
 
+    def untrace(self) -> None:
+        """Remove the span listener, so later queries run untraced."""
+        if self.listener is not None:
+            self.spark.streams.removeListener(self.listener)
+            self.listener = None
+
     def close(self) -> None:
         for q in self.spark.streams.active:
             q.stop()
-        if self.listener is not None:
-            self.spark.streams.removeListener(self.listener)
+        self.untrace()
         self.receiver.stop()
         self.collector.close()
 
@@ -243,15 +248,39 @@ def live_flat(run: h.Run, stack: _Stack) -> None:
     run.e2e["latency_tail_s"] = h.percentile(latencies, 99)
     run.layers["sink.deliveries"] = len(deliveries)
     run.layers["sink.deliveries_per_input_row"] = len(deliveries) / max(len(records), 1)
-    run.layers["sink.posts_failed"] = stale  # keys whose final result never arrived
+    run.layers["sink.results_missing"] = stale  # keys whose final result never arrived
+
+
+def _drain(run: h.Run, stack: _Stack, spool: str, accepted: int, expected: Counter, name: str):
+    """Drain the spool with one fresh query, timed from query start to the
+    last delivered result, and check that every expected window min
+    arrived; returns (seconds, progress reports, deliveries)."""
+    since = stack.collector.count()
+    n_expected = sum(expected.values())
+    t0 = time.time()
+    query = start_window_query(
+        stack.spark, spool, stack.collector.base, os.path.join(run.dir, f"{name}-ckpt")
+    )
+    done = stack.collector.wait_for(since + n_expected, timeout=60)
+    _await_rows(query, accepted, timeout=60)
+    progress = _event_rows(run, query, accepted, name)
+    query.stop()
+    got = [h.parse_delivery(r) for r in stack.collector.records(since)]
+    run.check(
+        done and Counter((k, v) for _, k, v in got) == expected,
+        f"{name}: {len(got)} deliveries do not match the {n_expected} expected window mins",
+    )
+    return max((t for t, _, _ in got), default=time.time()) - t0, progress, got
 
 
 def replay_probe(run: h.Run, stack: _Stack) -> str:
     """Fill a backlog through the receiver at a paced open-loop rate
-    (paced because windows are keyed by arrival time), then drain it with
-    one fresh query, timed from query start to the last delivered result.
-    Per-layer metrics the workload itself did not measure come from here.
-    Returns the spool, which the source and operator probes read."""
+    (paced because windows are keyed by arrival time), then drain it
+    twice, each time with a fresh query: first traced, then with the
+    listener removed.  The traced drain gives the per-layer metrics the
+    workload itself did not measure; the two drain times give
+    ``trace.overhead_ratio``.  Returns the spool, which the source and
+    operator probes read."""
     spool = os.path.join(run.dir, "replay-spool")
     receiver = NgsiHttpReceiver(spool, port=0).start()
     try:
@@ -266,34 +295,26 @@ def replay_probe(run: h.Run, stack: _Stack) -> str:
         run.layers.setdefault(k, v)
     accepted = sum(r[4] == 200 for r in records)
     expected = h.expected_window_mins(h.spool_events(spool))
-    n_expected = sum(expected.values())
     entity_rows = accepted * FILL_ENTITIES
 
-    since = stack.collector.count()
     with run.tracer.span("replay.drain") as dspan:
         if stack.listener is not None:
             stack.listener.parent = dspan
-        t0 = time.time()
-        query = start_window_query(
-            stack.spark, spool, stack.collector.base, os.path.join(run.dir, "replay-ckpt")
-        )
-        done = stack.collector.wait_for(since + n_expected, timeout=60)
-        _await_rows(query, accepted, timeout=60)
-        progress = _event_rows(run, query, accepted, "replay")
-        query.stop()
-    got = [h.parse_delivery(r) for r in stack.collector.records(since)]
-    run.check(
-        done and Counter((k, v) for _, k, v in got) == expected,
-        f"replay: {len(got)} deliveries do not match the {n_expected} expected window mins",
-    )
+        traced_s, progress, got = _drain(run, stack, spool, accepted, expected, "replay")
     for t, key, _ in got:
         run.tracer.add("sink.delivery", t, t, dspan, key=key)
-    run.layers["query.drain_rows_per_s"] = entity_rows / (max(t for t, _, _ in got) - t0)
+    stack.untrace()
+    untraced_s, _, _ = _drain(run, stack, spool, accepted, expected, "replay-untraced")
+
+    run.layers["query.drain_rows_per_s"] = entity_rows / traced_s
+    # the traced drain runs first, so JVM warm-up that helps the second
+    # drain counts against tracing
+    run.layers["trace.overhead_ratio"] = traced_s / untraced_s
     for k, v in stream_layers(progress).items():
         run.layers.setdefault(k, v)
     run.layers.setdefault("sink.deliveries", len(got))
     run.layers.setdefault("sink.deliveries_per_input_row", len(got) / entity_rows)
-    run.layers.setdefault("sink.posts_failed", max(n_expected - len(got), 0))
+    run.layers.setdefault("sink.results_missing", max(sum(expected.values()) - len(got), 0))
     return spool
 
 

@@ -40,8 +40,8 @@ def _names(prefix: str, n: int) -> list[str]:
     return [f"{prefix}#{i:09d}" for i in range(n)]
 
 
-def tables(scale: float) -> dict[str, pa.Table]:
-    rng = np.random.default_rng(42)
+def tables(scale: float, seed: int) -> dict[str, pa.Table]:
+    rng = np.random.default_rng(seed)
     n_cust = max(150, int(150_000 * scale))
     n_supp = max(10, int(10_000 * scale))
     n_part = max(200, int(200_000 * scale))
@@ -158,7 +158,7 @@ def tables(scale: float) -> dict[str, pa.Table]:
     return out
 
 
-def write(out_dir: str, scale: float) -> None:
+def write(out_dir: str, scale: float, seed: int) -> None:
     os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables(scale).items():
+    for name, table in tables(scale, seed).items():
         pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
